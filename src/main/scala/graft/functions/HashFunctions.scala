@@ -1341,8 +1341,4 @@ object HashFunctions {
     */
   def charEntropy(c: Column): Column =
     ColumnBridge.column(CharEntropy(ColumnBridge.expression(c)))
-
-  /** Seeded hash h_i(s) = (a*(md5prefix64(s) mod P) + b) mod P. */
-  def seededHash(c: Column, a: Long, b: Long): Column =
-    (lit(a) * (md5prefix64(c) % lit(HashUtil.P)) + lit(b)) % lit(HashUtil.P)
 }

@@ -37,13 +37,6 @@ object CurrentState {
       .drop("__rn")
   }
 
-  /** argMax-style latest via one aggregate (no window): CH `argMax`. */
-  def latestByAgg(df: DataFrame, key: String, orderCol: String,
-                  valueCols: Seq[String]): DataFrame =
-    df.groupBy(col(key))
-      .agg(max(col(orderCol)).as(s"max_$orderCol"),
-        valueCols.map(v => max_by(col(v), col(orderCol)).as(s"last_$v")): _*)
-
   /** Keep only rows within `interval` of the dataset's max(orderCol).
     * The scalar max is computed once and broadcast (no second scan of
     * a shuffled side, no collect).

@@ -782,17 +782,6 @@ object AdsbStream {
     } finally { bands.unpersist(false); priorLabels.unpersist(false) }
   }
 
-  /** The J26 sink: near-dup GROUP labels maintained incrementally. */
-  def startGroupLabelSink(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int, path: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        labelBatchIntoGroupState(batch, batchId, idCol, textCol, n, path)
-      }
-      .start()
-
   /** Read side of J26: resolve the label log to (id, label) — one
     * MIN per doc, after synthesizing each label's own self-row (a
     * component's min member may carry no explicit row: its id IS the

@@ -516,6 +516,113 @@ class PlanRegressionSpec extends SparkSpecBase {
     assert(!(other eq first))
   }
 
+  /** Spark jobs started while `body` runs, without the parquet schema
+    * reads of [[graft.sources.Tables]]: Spark infers a file's schema
+    * with one job on every read, before any memo lookup can serve it.
+    */
+  private def jobsDuring[T](body: => T): (Int, T) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!e.stageInfos.exists(_.name.startsWith("parquet at Tables.scala")))
+          started.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftbridge.ListenerBusDrain(sc)
+      (started.get, r)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Cached relations `df` reads, counted through the plans of the
+    * cached relations themselves: a frame cached over an uncached memo
+    * entry counts fewer than one cached over a live entry.
+    */
+  private def cachedRelations(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    def in(p: SparkPlan): Int = p.collect {
+      case s: InMemoryTableScanExec => 1 + in(s.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => in(a.inputPlan)
+    }.sum
+    df.queryExecution.withCachedData.collect {
+      case r: InMemoryRelation => 1 + in(r.cachedPlan)
+    }.sum
+  }
+
+  // Every TrackedCache.memo site, reached through a query that serves
+  // from it. `eager`: a miss runs Spark jobs while the query is built
+  // (i11's media pairs are a lazily persisted frame instead).
+  Seq(
+    "f7_dedup_components" -> true,
+    "i11_crossmodal_agreement" -> false,
+    "i12_crossmodal_canonical" -> true,
+    "h12_bpe_train" -> true,
+    "h12c_bpe_train_bytes" -> true,
+    "h23b_unigram_tokenize" -> true,
+    "p9_semantic_dedup" -> true
+  ).foreach { case (q, eager) =>
+    test(s"memo site $q: a second build starts no job; after release it recomputes") {
+      import graft.operators.TrackedCache
+      // a fresh input path: no memo entry in this JVM can predate it
+      val dir = java.nio.file.Files.createTempDirectory("memo-site")
+      Seq("documents", "embeddings").foreach(t => java.nio.file.Files.copy(
+        java.nio.file.Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet")))
+      val build = () => SparkEntry.queries(q)(spark, dir.toString)
+      try {
+        TrackedCache.release(spark)
+        val (_, first) = jobsDuring(build())
+        val cached = cachedRelations(first)
+        val rows = first.count()
+        val (again, _) = jobsDuring(build())
+        assert(again == 0)
+        TrackedCache.release(spark)
+        val (rebuilt, third) = jobsDuring(build())
+        if (eager) assert(rebuilt > 0)
+        // the rebuilt memo frame is cached again: a stale entry would
+        // hand out its unpersisted frame
+        assert(cachedRelations(third) == cached)
+        assert(third.count() == rows)
+      } finally {
+        TrackedCache.release(spark)
+        org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
+    }
+  }
+
+  test("session memo: a build may call memo for another key") {
+    import graft.operators.TrackedCache
+    val outer = TrackedCache.memo(spark, ("spec-outer", 1)) {
+      val inner = TrackedCache.memo(spark, ("spec-inner", 1))(spark.range(3).toDF("x"))
+      inner.union(inner)
+    }
+    assert(outer.count() == 6)
+    assert(TrackedCache.memo(spark, ("spec-outer", 1))(fail("outer rebuilt")) eq outer)
+    assert(TrackedCache.memo(spark, ("spec-inner", 1))(fail("inner rebuilt")).count() == 3)
+  }
+
+  test("session memo: the 17th key evicts the oldest entry and untracks its frame") {
+    import graft.operators.TrackedCache
+    import org.apache.spark.storage.StorageLevel
+    TrackedCache.release(spark)
+    val frames = (1 to TrackedCache.MemoBound + 1).map(i =>
+      TrackedCache.memo(spark, ("spec-bound", i))(
+        TrackedCache.persist(spark.range(i).toDF("x"))))
+    assert(frames.head.storageLevel == StorageLevel.NONE)
+    assert(frames.tail.forall(_.storageLevel != StorageLevel.NONE))
+    (2 to TrackedCache.MemoBound + 1).foreach(i =>
+      TrackedCache.memo(spark, ("spec-bound", i))(fail(s"live key $i rebuilt")))
+    var rebuilt = false
+    TrackedCache.memo(spark, ("spec-bound", 1)) { rebuilt = true; spark.range(1).toDF("x") }
+    assert(rebuilt)
+    TrackedCache.release(spark)
+  }
+
   test("h19 Kneser-Ney: model assembled at type level — type total broadcast, no cartesian, hash aggs only") {
     val p = executedPlan("h19_kneser_ney_nll")
     // the 1-row type-count total joins via broadcast nested loop, and
