@@ -61,7 +61,7 @@ object BpeTrainer {
                         vocab: DataFrame, merges: Int): DataFrame = {
     import spark.implicits._
     TrackedCache.memo(spark,
-        ("bpe-merges", vocab.queryExecution.analyzed.canonicalized, merges)) {
+        ("bpe-merges", TrackedCache.planKey(vocab), merges)) {
       var seqs = TrackedCache.persist(vocab)
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(Int, String, String, String, Long)]

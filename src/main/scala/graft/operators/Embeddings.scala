@@ -801,7 +801,7 @@ object Embeddings {
                     algo: ComponentsAlgo = ComponentsAlgo.MinLabel): DataFrame = {
     val assignFrame = kmeansAssignments(df, init, idCol, vecCol, iters)
     TrackedCache.memo(df.sparkSession, ("semantic-dedup",
-        assignFrame.queryExecution.analyzed.canonicalized, tau, algo))(
+        TrackedCache.planKey(assignFrame), tau, algo))(
       TrackedCache.persist(
         semanticDedupCompute(assignFrame, idCol, vecCol, tau, algo)))
   }

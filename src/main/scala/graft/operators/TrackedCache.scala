@@ -22,10 +22,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * collected rows (fresh RDDs on every run), and frames whose typed
   * closures make every rebuilt plan unequal. Its contract:
   *  - '''Key:''' (applicationId, `key`). Each caller's key starts with
-  *    a site name; plan-keyed sites add the canonicalized analyzed
-  *    plan of their input plus their parameters. A plan over files
-  *    names the paths, not the file contents: call [[release]] after
-  *    rewriting an input in place, or the memo serves the old result.
+  *    a site name and carries the version of every input it reads:
+  *    dir-keyed sites add the `Tables` catalog fingerprint of their
+  *    tables, plan-keyed sites add [[planKey]] of their input plus
+  *    their parameters. A rewritten input therefore gets a new key, and
+  *    the memo never serves a result computed from its old files.
   *  - '''Epoch:''' [[release]] drops the application's entries before
   *    it unpersists, and one `onApplicationEnd` listener per
   *    application drops them when the application ends.
@@ -36,6 +37,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    it may run Spark jobs and call [[memo]] for other keys. Its
   *    result is published with putIfAbsent; two racing callers may
   *    both build, and both get the first frame published.
+  *
+  * [[memoHits]] and [[memoMisses]] count memo calls JVM-wide.
   */
 object TrackedCache {
 
@@ -84,17 +87,39 @@ object TrackedCache {
   /** Insertion-ordered for the FIFO bound; guarded by its own monitor. */
   private val memos = new java.util.LinkedHashMap[(String, Product), DataFrame]()
 
-  private val watched = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val hitCount = new java.util.concurrent.atomic.AtomicLong()
+  private val missCount = new java.util.concurrent.atomic.AtomicLong()
+
+  def memoHits: Long = hitCount.get
+  def memoMisses: Long = missCount.get
+
+  /** The input part of a plan-keyed memo key: the canonicalized
+    * analyzed plan of `df`, and (path, length, mtime) of every file its
+    * file relations list. Canonicalized plans compare file relations by
+    * root path only, so without the versions a rewritten input would
+    * match its old plan.
+    */
+  def planKey(df: DataFrame): Product = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    val plan = df.queryExecution.analyzed
+    val files = plan.collectWithSubqueries { case r: LogicalRelation => r.relation }.flatMap {
+      case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      case _ => Nil
+    }
+    (plan.canonicalized, files)
+  }
 
   /** The session's frame for `key`, built by `build` on a miss (see
     * the contract above).
     */
   def memo(spark: SparkSession, key: Product)(build: => DataFrame): DataFrame = {
-    val appId = watch(spark)
+    val appId = onApplicationEnd(spark, "memo")(dropMemos)
     val k = (appId, key)
     val hit = memos.synchronized(memos.get(k))
-    if (hit != null) hit
+    if (hit != null) { hitCount.incrementAndGet(); hit }
     else {
+      missCount.incrementAndGet()
       val fresh = build
       val (won, evicted) = memos.synchronized {
         val raced = memos.putIfAbsent(k, fresh)
@@ -110,14 +135,20 @@ object TrackedCache {
     }
   }
 
-  /** Installs the application's `onApplicationEnd` evictor once. */
-  private def watch(spark: SparkSession): String = {
+  private val watched = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+
+  /** Runs `drop(applicationId)` when the application of `spark` ends,
+    * installing one listener per (`owner`, application); returns the
+    * application id. Session-scoped state (the memo, the `Tables`
+    * catalog) is freed through it.
+    */
+  def onApplicationEnd(spark: SparkSession, owner: String)(drop: String => Unit): String = {
     val appId = spark.sparkContext.applicationId
-    if (watched.add(appId))
+    if (watched.add((owner, appId)))
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
-          dropMemos(appId)
-          watched.remove(appId)
+          drop(appId)
+          watched.remove((owner, appId))
         }
       })
     appId

@@ -168,8 +168,7 @@ object UnigramLm {
   def train(docs: DataFrame, textCol: String, vocabSize: Int,
             rounds: Int = 2, seedCap: Int = 200): DataFrame =
     TrackedCache.memo(docs.sparkSession, ("unigram-vocab",
-        docs.queryExecution.analyzed.canonicalized,
-        textCol, vocabSize, rounds, seedCap)) {
+        TrackedCache.planKey(docs), textCol, vocabSize, rounds, seedCap)) {
       // EM state is ARTIFACT-sized (≤ seedCap + |alphabet| pieces —
       // bounded by parameters, never by data), so every fence after
       // the word-freq pass is a driver-collected LocalRelation
@@ -236,8 +235,7 @@ object UnigramLm {
     // localCheckpoint, whose RDD scans the plan-keyed cache cannot
     // match on a repeated apply
     val perWord = TrackedCache.memo(docs.sparkSession, ("unigram-per-word",
-        docs.queryExecution.analyzed.canonicalized,
-        vocab.queryExecution.analyzed.canonicalized)) {
+        TrackedCache.planKey(docs), TrackedCache.planKey(vocab))) {
       // plan-keyed persist: when apply and train share a corpus
       // (h23b), this IS the frame train() already materialized.
       val words = TrackedCache.persist(wordFreqs(docs, textCol))

@@ -357,7 +357,8 @@ object PipelineQueries {
     // decode closure defeats plan-keyed cache dedup (a fresh closure
     // instance per call ⇒ unequal plans), so without the memo the
     // second consumer would re-decode the whole corpus
-    val mediaPairs = graft.operators.TrackedCache.memo(s, ("media-pairs", dir))(
+    val mediaPairs = graft.operators.TrackedCache.memo(s,
+        ("media-pairs", dir, Tables.fingerprint(s, dir, "documents")))(
       graft.operators.TrackedCache.persist(graft.operators.Multimodal
         .mediaNearDupPairsReal(s, recs, maxHamming = 7).select("a", "b")))
     (corpus, textPairs, mediaPairs)
@@ -378,7 +379,8 @@ object PipelineQueries {
     // to Star automatically (same labeling — ComponentsSpec) instead
     // of running O(diameter) rounds. Callers who know the shape can
     // still pass the explicit algo through Dedup.components.
-    graft.operators.TrackedCache.memo(s, ("components", dir))(
+    graft.operators.TrackedCache.memo(s,
+        ("components", dir, Tables.fingerprint(s, dir, "documents")))(
       Dedup.components(
           Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text", 4),
           "a", "b", graft.operators.ComponentsAlgo.Auto)
@@ -3290,7 +3292,8 @@ object PipelineQueries {
         // loop is ~15 driver-fenced jobs per run, and the decision is
         // the session's dedup artifact (474 rows at sf0.01), not
         // per-read work
-        val frame = graft.operators.TrackedCache.memo(s, ("i12-canonical", dir)) {
+        val frame = graft.operators.TrackedCache.memo(s,
+            ("i12-canonical", dir, Tables.fingerprint(s, dir, "documents"))) {
           val (corpus, textPairs, mediaPairs) = crossModalFrames(s, dir)
           val docsQ = corpus.withColumn("quality",
             length(col("text")).cast("long"))

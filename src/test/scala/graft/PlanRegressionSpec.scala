@@ -516,28 +516,6 @@ class PlanRegressionSpec extends SparkSpecBase {
     assert(!(other eq first))
   }
 
-  /** Spark jobs started while `body` runs, without the parquet schema
-    * reads of [[graft.sources.Tables]]: Spark infers a file's schema
-    * with one job on every read, before any memo lookup can serve it.
-    */
-  private def jobsDuring[T](body: => T): (Int, T) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (!e.stageInfos.exists(_.name.startsWith("parquet at Tables.scala")))
-          started.incrementAndGet()
-    }
-    org.apache.spark.graftbridge.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.graftbridge.ListenerBusDrain(sc)
-      (started.get, r)
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** Cached relations `df` reads, counted through the plans of the
     * cached relations themselves: a frame cached over an uncached memo
     * entry counts fewer than one cached over a live entry.
@@ -555,32 +533,54 @@ class PlanRegressionSpec extends SparkSpecBase {
     }.sum
   }
 
+  /** A fresh input dir holding copies of the sf0.001 memo-site inputs:
+    * no memo or catalog entry in this JVM can predate its path.
+    */
+  private def memoSiteInputs(): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("memo-site")
+    Seq("documents", "embeddings").foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet")))
+    dir
+  }
+
+  /** Overwrites `dir`'s `input` with a different row subset of the
+    * sf0.001 table: ids below 10 (k-means seeds, planted twins) and the
+    * even ids.
+    */
+  private def rewriteSubset(dir: java.nio.file.Path, input: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val id = if (input == "embeddings") "vec_id" else "doc_id"
+    graft.sources.Tables.table(spark, sf, input)
+      .filter(col(id) < 10 || col(id) % 2 === 0)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/$input.parquet")
+  }
+
   // Every TrackedCache.memo site, reached through a query that serves
-  // from it. `eager`: a miss runs Spark jobs while the query is built
-  // (i11's media pairs are a lazily persisted frame instead).
+  // from it, with the table it reads. `eager`: a miss runs Spark jobs
+  // while the query is built (i11's media pairs are a lazily persisted
+  // frame instead).
   Seq(
-    "f7_dedup_components" -> true,
-    "i11_crossmodal_agreement" -> false,
-    "i12_crossmodal_canonical" -> true,
-    "h12_bpe_train" -> true,
-    "h12c_bpe_train_bytes" -> true,
-    "h23b_unigram_tokenize" -> true,
-    "p9_semantic_dedup" -> true
-  ).foreach { case (q, eager) =>
+    ("f7_dedup_components", true, "documents"),
+    ("i11_crossmodal_agreement", false, "documents"),
+    ("i12_crossmodal_canonical", true, "documents"),
+    ("h12_bpe_train", true, "documents"),
+    ("h12c_bpe_train_bytes", true, "documents"),
+    ("h23b_unigram_tokenize", true, "documents"),
+    ("p9_semantic_dedup", true, "embeddings")
+  ).foreach { case (q, eager, input) =>
     test(s"memo site $q: a second build starts no job; after release it recomputes") {
       import graft.operators.TrackedCache
-      // a fresh input path: no memo entry in this JVM can predate it
-      val dir = java.nio.file.Files.createTempDirectory("memo-site")
-      Seq("documents", "embeddings").foreach(t => java.nio.file.Files.copy(
-        java.nio.file.Paths.get(sf, s"$t.parquet"), dir.resolve(s"$t.parquet")))
+      val dir = memoSiteInputs()
       val build = () => SparkEntry.queries(q)(spark, dir.toString)
       try {
         TrackedCache.release(spark)
         val (_, first) = jobsDuring(build())
         val cached = cachedRelations(first)
         val rows = first.count()
+        val (hits, misses) = (TrackedCache.memoHits, TrackedCache.memoMisses)
         val (again, _) = jobsDuring(build())
         assert(again == 0)
+        assert(TrackedCache.memoHits > hits && TrackedCache.memoMisses == misses)
         TrackedCache.release(spark)
         val (rebuilt, third) = jobsDuring(build())
         if (eager) assert(rebuilt > 0)
@@ -591,6 +591,31 @@ class PlanRegressionSpec extends SparkSpecBase {
       } finally {
         TrackedCache.release(spark)
         org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+      }
+    }
+
+    test(s"memo site $q: after $input is overwritten, the next build recomputes without release") {
+      import graft.operators.TrackedCache
+      // rows in a canonical order: i11's one row and h12's eight
+      // merges keep their count on any corpus, not their values
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      val (dir, fresh) = (memoSiteInputs(), memoSiteInputs())
+      try {
+        val before = rows(SparkEntry.queries(q)(spark, dir.toString))
+        rewriteSubset(dir, input)
+        rewriteSubset(fresh, input)
+        // the reference: the same query on a path no memo has seen
+        val expected = rows(SparkEntry.queries(q)(spark, fresh.toString))
+        assert(expected != before)
+        val (resolutions, misses) = (graft.sources.Tables.resolutions, TrackedCache.memoMisses)
+        val (jobs, rebuilt) = jobsDuring(SparkEntry.queries(q)(spark, dir.toString))
+        assert(jobs > 0)
+        assert(graft.sources.Tables.resolutions > resolutions)
+        assert(TrackedCache.memoMisses > misses)
+        assert(rows(rebuilt) == expected)
+      } finally {
+        TrackedCache.release(spark)
+        Seq(dir, fresh).foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
       }
     }
   }

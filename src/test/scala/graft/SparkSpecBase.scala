@@ -16,4 +16,21 @@ trait SparkSpecBase extends AnyFunSuite {
     .getOrCreate()
 
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Every Spark job started while `body` runs. */
+  protected def jobsDuring[T](body: => T): (Int, T) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    org.apache.spark.graftbridge.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftbridge.ListenerBusDrain(sc)
+      (started.get, r)
+    } finally sc.removeSparkListener(listener)
+  }
 }
