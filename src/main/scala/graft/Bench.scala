@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR. Queries are warmed once at sf0.001 first so
   * JIT/codegen compilation is not attributed to whichever query
@@ -22,31 +20,25 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession.local(cpus)
 
     // optional prefix filter (`runMain graft.Bench e14f`) for the
     // local iterate-on-one-query loop: same warm + 3-pass min
     // methodology, but the sf1 section is skipped and the artifact
     // file is written only when SPARK_GRAFT_BENCH_OUT explicitly
     // names one — a filtered run must never clobber the full
-    // BENCH_LOCAL artifact the cross-round diffs read
+    // per-query artifact of the last unfiltered run
     val onlyPrefix: Option[String] = args.headOption
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => onlyPrefix.forall(n.startsWith))
     // Warm pass doubles as the CLASSIFICATION pass (the r13 verdict's
     // two-baseline item): each query's executed plan is classified
     // compute-bound vs shuffle-bound ONCE, from its exchange count —
-    // cross-round diffs (tools/bench_diff.py) then normalize each
-    // class by its own anchor (t1 for compute, the sh shuffle leg for
-    // shuffle), because one compute anchor provably under-corrects
-    // shuffle-heavy walls on a contended host (r13 run 3: +15 %).
+    // a cross-run diff normalizes each class by its own anchor (t1
+    // for compute, the sh shuffle leg for shuffle), because one
+    // compute anchor under-corrects shuffle-heavy walls on a
+    // contended host (HISTORY.md, "Host anchors").
     val queryClass = scala.collection.mutable.Map[String, String]()
     names.foreach { name =>
       try {
@@ -55,8 +47,8 @@ object Bench {
         // Count only SHUFFLE exchanges: a bare "Exchange" regex also
         // matches BroadcastExchange/ReusedExchange, so a broadcast-
         // join-heavy compute-bound query (≥3 broadcasts) would be
-        // classified shuffle and normalized by the wrong anchor in
-        // tools/bench_diff.py. "Exchange hashpartitioning|range..."
+        // classified shuffle and normalized by the wrong anchor.
+        // "Exchange hashpartitioning|range..."
         // is the physical shuffle node's own print form.
         // ShuffleExchangeExec prints as a bare "Exchange <partitioning>"
         // node; Broadcast/Reused carry their prefix glued on, so a
@@ -241,7 +233,7 @@ object Bench {
     // once-per-core through Spark tasks. Cross-round walls normalize
     // by the anchor ratio; mt/t1 >> 1 additionally flags a host that
     // was CONTENDED during the run, not merely slower.
-    val anchor = Calibration.measure(spark, cpus.toInt)
+    val anchor = Calibration.measure(spark, cpus)
 
     val passes = results.map { case (k, _) =>
       "\"" + k + "\":[" + Seq(p1(k), p2(k), p3(k)).map(fmt).mkString(",") + "]"
@@ -293,7 +285,7 @@ object Bench {
     // STDOUT gets a COMPACT line instead of the full artifact: the
     // driver's capture kept ~2000 chars, so for three rounds the 31 kB
     // full line tail-truncated to an unparseable fragment
-    // (BENCH_r{13,14,15}.json all `parsed: null`). Everything below
+    // (HISTORY.md, "Bench stdout"). Everything below
     // fits the capture window whole — headline totals, the slowest-10
     // tail, the host anchor, and a pointer to the on-disk full
     // artifact for per-query diffs.

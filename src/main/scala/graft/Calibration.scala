@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Host-calibration anchor for cross-round bench comparability.
   *
   * Bench walls from different rounds run on different (shared,
-  * variably-loaded) hosts: r11 measured unchanged StressBench legs
-  * 2.5-3x slower than r10 on identical code, so absolute cross-round
-  * walls carry an unknown host factor. This anchor is that factor,
-  * measured: a fixed pure-compute kernel (a splitmix-style integer
+  * variably-loaded) hosts: round 11 ran unchanged code 2.5-3x
+  * slower than round 10 (HISTORY.md, "Host anchors"), so absolute
+  * cross-round walls carry an unknown host factor. This anchor is
+  * that factor, measured: a fixed pure-compute kernel (a
+  * splitmix-style integer
   * mixer — no I/O, no allocation, no branches, deterministic result)
   * timed (a) single-threaded on the driver and (b) as one identical
   * task per core through Spark. Dividing two rounds' per-query walls
@@ -71,8 +72,8 @@ object Calibration {
     // pure-shuffle scenario — 4M rows hashed to 1M keys, one forced
     // exchange + hash aggregation, no I/O — whose result is asserted
     // (Σ id = n(n−1)/2), so a short-circuited plan can't pass.
-    // Shuffle-classified queries normalize by THIS ratio in
-    // tools/bench_diff.py; compute-classified ones by t1.
+    // Shuffle-classified queries normalize by THIS ratio,
+    // compute-classified ones by t1.
     // 8M rows and min-of-THREE: two same-code r14 runs measured the
     // 4M/min-of-2 spelling swinging ±15 % (0.527 vs 0.450 s) while t1
     // held to 0.3 % — a shuffle leg short enough to fit inside one

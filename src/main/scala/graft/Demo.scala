@@ -3,7 +3,6 @@ package graft
 import graft.operators.Multimodal
 import graft.operators.Multimodal.{MediaRecord, ResizeParams}
 import graft.streaming.AdsbStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,15 +14,8 @@ import org.apache.spark.sql.types._
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local()
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
 
     // --- Streaming: file-source feed → normalize → latest state ---
     // Stage the events table as a streaming directory source.

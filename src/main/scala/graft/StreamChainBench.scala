@@ -2,12 +2,10 @@ package graft
 
 import graft.functions.HashFunctions
 import graft.streaming.AdsbStream
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The COMPOSED production streaming chain, end to end — the order a
-  * crawl-ingest pipeline runs its passes (STREAM_BENCH r8 claimed
-  * it; this measures it):
+  * crawl-ingest pipeline runs its passes:
   *
   *   J17 paragraph dedup-cut → J13 quality gate →
   *   J18 mixing gate → J12 bloom decontamination →
@@ -52,19 +50,13 @@ import org.apache.spark.sql.functions._
   * the two indexes must grow linearly in SURVIVORS. Per-batch
   * per-stage counts print as one JSON line per rate.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.StreamChainBench"
+  * Usage: sbt "runMain graft.StreamChainBench" (local parallelism
+  * from `SPARK_GRAFT_CPUS`, default 4 — see [[GraftSession.cores]])
   */
 object StreamChainBench {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val tmp = java.nio.file.Files.createTempDirectory("streamchain").toString

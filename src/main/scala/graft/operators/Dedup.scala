@@ -522,7 +522,8 @@ object Dedup {
   }
 
   /** MinLabel round cap for [[ComponentsAlgo.Auto]]: near-dup graphs
-    * converge in 2–4 rounds (measured, SCALE_r09 §2); 5 is past every
+    * converge in 2–4 rounds (HISTORY.md, "Components: Star for chains,
+    * MinLabel for near-dup stars"); 5 is past every
     * observed convergence yet cheap enough that paying it before the
     * Star fallback costs less than ONE extra MinLabel diameter-round
     * regime on a chain graph.
@@ -1106,7 +1107,8 @@ object Dedup {
     * per band) — the caller picks the radius/selectivity point. The
     * 8-band default is the real-pHash operating point (lossless to
     * radius 7, which covers lossy re-encode + 2× resize drift).
-    * Measured trade (SCALE_r09 §9): at 300k prints the 8-bit buckets
+    * Measured trade (HISTORY.md, "Perceptual banding: radius against
+    * selectivity"): at 300k prints the 8-bit buckets
     * generate ~500× the candidates of [[hammingBandPairs]]'s 16-bit
     * buckets (1.55G vs 3.1M, both ∝ N²) — so radius 7 on 64-bit
     * prints is the MICROBATCH/bounded-pool operating point (J16's
@@ -1222,8 +1224,9 @@ object ComponentsAlgo {
     * long-chain fallback.
     */
   case object Star extends ComponentsAlgo
-  /** The measured crossover as a POLICY (SCALE_r09 §2: MinLabel wins
-    * on near-dup shapes, Star wins 2.9× at diameter 63): run
+  /** The measured crossover as a POLICY (HISTORY.md, "Components: Star
+    * for chains, MinLabel for near-dup stars": MinLabel wins on
+    * near-dup shapes, Star wins 2.9× at diameter 63): run
     * MinLabel capped at [[Dedup.AutoRoundCap]] rounds — past every
     * measured near-dup convergence (2–4) — and fall over to Star
     * when the cap trips. Worst case pays the capped rounds twice;

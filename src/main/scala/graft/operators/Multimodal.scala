@@ -150,7 +150,8 @@ object Multimodal {
   }
 
   /** Two-level perceptual near-dup (the MEASURED operating point —
-    * MediaCodecSpec/SCALE_r09 §9): CANDIDATES from the 64-bit code's
+    * MediaCodecSpec; HISTORY.md, "Perceptual banding: radius against
+    * selectivity"): CANDIDATES from the 64-bit code's
     * radius-7 multi-index bands (low-frequency bits drift ≤ 7 under
     * re-encode), CONFIRMED at Hamming ≤ `confirm256` on the 256-bit
     * code, whose dup-vs-distinct gap (≤ 58 / ≥ 94) removes the

@@ -26,7 +26,8 @@ object ScaleOps {
     * exchange of the (narrow, pre-heavy-work) input so the row-local
     * compute that follows uses every core instead of one. Measured on
     * local[32] at sf0.1: compute-heavy scans run at effective
-    * parallelism ~1 without it (StageProfile, OPTIMIZATION_r16.md).
+    * parallelism ~1 without it (HISTORY.md, "One-file inputs scan as
+    * one task").
     *
     * Scale-adaptive, not a local[32] constant: when the scan already
     * yields >= defaultParallelism splits (any real multi-file /

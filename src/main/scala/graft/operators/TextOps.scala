@@ -173,7 +173,7 @@ object TextOps {
     // divergence is ≤ ln 2, but a large vocabulary with near-disjoint
     // slice distributions can push the quantized sum past it by the
     // accumulated half-ulps. Consumers asserting the ln 2 invariant
-    // must allow that epsilon (StreamBench's J25 read-out does).
+    // must allow that epsilon (StreamIndexCompactionSpec's J25 case does).
     // tie-stable 6-dp quantize — the same four IEEE ops in both
     // engines (multiply, add, floor, divide); see h7's rationale
     def q6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)

@@ -172,11 +172,12 @@ object UnigramLm {
       // EM state is ARTIFACT-sized (≤ seedCap + |alphabet| pieces —
       // bounded by parameters, never by data), so every fence after
       // the word-freq pass is a driver-collected LocalRelation
-      // instead of a cluster-wide localCheckpoint: the r16
-      // StageProfile showed the checkpoint-per-layer spelling paying
-      // 43 sequential jobs of pure fixed cost for h23b (wall 3.5 s on
-      // 1.6 task-s). The collect is the k-means/PQ codebook-collect
-      // contract; one distributed pass per E-step remains — the only
+      // instead of a cluster-wide localCheckpoint: the
+      // checkpoint-per-layer spelling paid 43 sequential jobs of pure
+      // fixed cost for h23b (wall 3.5 s on 1.6 task-s; HISTORY.md,
+      // "Driver fences cost whole jobs"). The collect is the
+      // k-means/PQ codebook-collect contract; one distributed pass
+      // per E-step remains — the only
       // corpus-scale work there is.
       val spark = docs.sparkSession
       import spark.implicits._

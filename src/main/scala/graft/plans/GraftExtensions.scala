@@ -6,19 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** SQL-surface registration of graft's native expressions, so SQL
-  * users get them without touching the Scala API:
+  * users get them without touching the Scala API. A session built by
+  * [[graft.GraftSession.local]] carries them:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)…
   *   spark.sql("SELECT md5prefix64(text) FROM docs")
   *
   * [[GraftFunctions.register]] does the same against an
   * already-running session (extensions only apply at build time).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
+  override def apply(e: SparkSessionExtensions): Unit =
     GraftFunctions.descriptions.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => RewriteLatestByToArgMax)
-  }
 }
 
 object GraftFunctions {

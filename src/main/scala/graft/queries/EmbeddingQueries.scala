@@ -1560,8 +1560,9 @@ object EmbeddingQueries {
         // picks as one codegen'd projection (the h23 Viterbi-unroll
         // pattern) — the checkpointed 4-step DataFrame spelling paid
         // ~30 driver-fenced jobs of window/join fixed cost for tiny
-        // frames (r17 StageProfile). Same arithmetic: score(c) =
-        // 0.7·rel − 0.3·max sim(c, selected); argmax folds candidates
+        // frames (HISTORY.md, "Driver fences cost whole jobs"). Same
+        // arithmetic: score(c) = 0.7·rel − 0.3·max sim(c, selected);
+        // argmax folds candidates
         // in cid order, replacing only on strictly-greater score —
         // exactly row_number(score DESC, cid ASC) = 1. Distributed
         // over queries at any scale; no per-step fences.

@@ -2903,8 +2903,8 @@ object PipelineQueries {
     // the codec seam i2 documents, now closed with the JDK codec.
     // Corpus bounded to 5000 docs: the per-doc property is what the
     // entry proves, and synthesizing media for EVERY sf1 doc benches
-    // payload generation, not analytics (throughput at volume is
-    // StressBench media_pipeline's job).
+    // payload generation, not analytics (throughput at volume:
+    // HISTORY.md, "Media codec throughput").
     QueryDef("i5_real_media_features",
       (s, dir) => {
         import s.implicits._

@@ -114,9 +114,10 @@ object RelationalQueries {
         val n = Tables.nation(s, dir)
         val c = Tables.customer(s, dir)
         val o = Tables.orders(s, dir)
-        // r16: the one-file lineitem scan otherwise runs the whole
+        // the one-file lineitem scan otherwise runs the whole
         // broadcast-join + decimal-agg chain as a single task
-        // (StageProfile par 0.8); spread is the identity on any
+        // (parallelism 0.8; HISTORY.md, "One-file inputs scan as one
+        // task"); spread is the identity on any
         // properly split scan (ScaleOps.spread)
         val l = graft.operators.ScaleOps.spread(Tables.lineitem(s, dir))
         l.join(o, col("l_orderkey") === col("o_orderkey"))

@@ -77,7 +77,6 @@ class CmsSpec extends SparkSpecBase {
   }
 
   test("SQL surface: countmin64 registered, sketch equals the Column API build") {
-    graft.plans.GraftFunctions.register(spark)
     spark.range(0, 1000).createOrReplaceTempView("cms_t")
     val viaSql = spark.sql("SELECT countmin64(id % 50, 4, 256) FROM cms_t")
       .head().getAs[Array[Byte]](0)

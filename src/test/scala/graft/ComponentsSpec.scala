@@ -94,6 +94,34 @@ class ComponentsSpec extends SparkSpecBase {
     assert(viaAuto.values.toSet == Set(1L))
   }
 
+  test("MinLabel, Star and Auto agree on a mixed stars + chains + cliques graph") {
+    import graft.operators.ComponentsAlgo
+    import org.apache.spark.sql.functions.{explode, expr}
+    // the mixed near-dup population: diameter-2 stars, diameter-15
+    // chains (past Auto's round cap, so Auto falls over to Star) and
+    // 8-cliques, interleaved in one edge list
+    val (stars, chains, cliques) = (200L, 20L, 10L)
+    val starEdges = spark.range(stars * 7)
+      .select(expr("(id DIV 7) * 8").as("a"), expr("(id DIV 7) * 8 + id % 7 + 1").as("b"))
+    val chainEdges = spark.range(chains * 16).filter(col("id") % 16 =!= 15)
+      .select((col("id") + 100000L).as("a"), (col("id") + 100001L).as("b"))
+    val cliquePairs = (for (i <- 0 until 8; j <- i + 1 until 8)
+      yield s"named_struct('i', $i, 'j', $j)").mkString("array(", ", ", ")")
+    val cliqueEdges = spark.range(cliques)
+      .select(col("id"), explode(expr(cliquePairs)).as("p"))
+      .select((col("id") * 8 + col("p.i") + 200000L).as("a"),
+        (col("id") * 8 + col("p.j") + 200000L).as("b"))
+    val edges = starEdges.unionByName(chainEdges).unionByName(cliqueEdges)
+    def labels(algo: ComponentsAlgo): Map[Long, Long] =
+      Dedup.components(edges, "a", "b", algo, maxIter = 100)
+        .as[(Long, Long)].collect().toMap
+    val viaMinLabel = labels(ComponentsAlgo.MinLabel)
+    assert(viaMinLabel.size == stars * 8 + chains * 16 + cliques * 8)
+    assert(viaMinLabel.values.toSet.size == stars + chains + cliques)
+    assert(labels(ComponentsAlgo.Star) == viaMinLabel)
+    assert(labels(ComponentsAlgo.Auto) == viaMinLabel)
+  }
+
   test("semanticDedup output is algo-invariant (MinLabel vs Star)") {
     import graft.operators.{ComponentsAlgo, Embeddings}
     // tiny deterministic corpus: 3 clusters of near-identical vectors

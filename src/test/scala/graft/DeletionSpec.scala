@@ -278,4 +278,47 @@ class DeletionSpec extends SparkSpecBase {
     assert(back.filter(col("text") === "alpha beta gamma").count() == 0)
     assert(back.count() == 2)
   }
+
+  test("purgeByKeys on a live J11 screen store: the store forgets deleted docs and still screens the rest (J29)") {
+    import graft.streaming.{AdsbStream, StreamIndexCompaction}
+    import graft.streaming.AdsbStream.StreamDoc
+    val dir = java.nio.file.Files.createTempDirectory("graft_j29").toString
+    val (index, surv) = (s"$dir/index", s"$dir/surv")
+    val (rate, nB) = (20, 6)
+    def text(b: Int, i: Int): String = (0 until 30).map(w => s"w${b}_${i}_$w").mkString(" ")
+    // docs 0 and 1 of every later batch repeat docs 2 and 3 of the
+    // batch before, so they screen out; every other doc survives
+    def docBatch(b: Int): Seq[StreamDoc] = (0 until rate).map { i =>
+      val (ob, oi) = if (b > 0 && i < 2) (b - 1, 2 + i) else (b, i)
+      StreamDoc(b.toLong * rate + i, text(ob, oi))
+    }
+    (0 until nB).foreach { b =>
+      AdsbStream.screenAndIndexBatch(docBatch(b).toDF("doc_id", "text"),
+        b.toLong, "doc_id", "text", 3, index, surv)
+      if (b % 3 == 2) { // the purge must cross the compacted segment too
+        StreamIndexCompaction.compactIndex(spark, index, keepRecent = 2)
+        StreamIndexCompaction.compactIndex(spark, surv, keepRecent = 2)
+      }
+    }
+    assert(StreamIndexCompaction.compactedThrough(spark, index) >= 0)
+    // delete doc 2 of every batch: a survivor whose text doc 0 of the
+    // next batch repeated
+    val delIds = (0 until nB).map(b => b.toLong * rate + 2).toDF("doc_id")
+    Deletion.purgeByKeys(spark, index, Seq("batch_id"), "doc_id", delIds)
+    Deletion.purgeByKeys(spark, surv, Seq("batch_id"), "doc_id", delIds)
+    for (p <- Seq(index, surv))
+      assert(spark.read.parquet(p).join(delIds, Seq("doc_id")).isEmpty, s"residue in $p")
+    assert(StreamIndexCompaction.compactedThrough(spark, index) >= 0,
+      "the purge lost the compacted segment's replay watermark")
+    // probe: repeats of deleted docs now pass, repeats of surviving
+    // docs still screen out, unique docs pass
+    val probe = (0 until nB).map(b => StreamDoc(900000L + b, text(b, 2))) ++
+      (0 until nB).map(b => StreamDoc(910000L + b, text(b, 10))) ++
+      (0 until nB).map(i => StreamDoc(920000L + i, text(nB, i)))
+    AdsbStream.screenAndIndexBatch(probe.toDF("doc_id", "text"),
+      nB.toLong, "doc_id", "text", 3, index, surv)
+    val passed = spark.read.parquet(surv).filter(col("batch_id") === nB)
+      .select("doc_id").as[Long].collect().toSet
+    assert(passed == ((900000L until 900000L + nB) ++ (920000L until 920000L + nB)).toSet)
+  }
 }

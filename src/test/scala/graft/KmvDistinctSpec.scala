@@ -55,7 +55,6 @@ class KmvDistinctSpec extends SparkSpecBase {
 
   test("SQL surface: kmvdistinct64 aggregates from spark.sql") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     (1 to 100).map(i => s"u${i % 9}").toDF("s")
       .select(HashFunctions.md5prefix64(col("s")).as("h"))
       .createOrReplaceTempView("kmv_sql_in")

@@ -138,6 +138,31 @@ class MediaCodecSpec extends SparkSpecBase {
     assert(MediaCodec.dominantFreq("junk".getBytes("UTF-8"), 100, 1000, 5).isEmpty)
   }
 
+  test("every PNG decode, GIF keyframe cut and WAV tone is recovered across Spark partitions (I5, I7, I8)") {
+    // the codec family as the media queries run it: mapPartitions over
+    // ids spread to every core, one synth→encode→decode→feature per id
+    val n = 200L
+    val ids = spark.range(n).as[Long]
+      .repartition(spark.sparkContext.defaultParallelism)
+    val imgOk = ids.mapPartitions(_.map { id =>
+      if (MediaCodec.phash64(MediaCodec.synthImagePng(id, 96, 96)).isDefined) 1L else 0L
+    }).reduce(_ + _)
+    assert(imgOk == n, s"image decodes: $imgOk of $n")
+    val gifOk = ids.filter(_ < n / 10).mapPartitions(_.map { id =>
+      val cutAt = 2 + (id % 5).toInt
+      val gif = MediaCodec.synthGifAnimated(id, 96, 96, 8, cutAt)
+      val cuts = MediaCodec.sceneCuts(MediaCodec.gifFramePHashes(gif).get)
+      if (cuts.toSeq == Seq(cutAt)) 1L else 0L
+    }).reduce(_ + _)
+    assert(gifOk == n / 10, s"planted keyframe cuts found: $gifOk of ${n / 10}")
+    val wavOk = ids.mapPartitions(_.map { id =>
+      val planted = 220 + math.floorMod(id, 660L).toInt
+      val dom = MediaCodec.dominantFreq(MediaCodec.synthWav(id, 8000, 100), 100, 1000, 5).get
+      if (math.abs(dom - planted) <= 3) 1L else 0L
+    }).reduce(_ + _)
+    assert(wavOk == n, s"planted tones recovered: $wavOk of $n")
+  }
+
   test("mediaNearDupPairsReal pairs re-encoded copies, not distinct assets (I4-real)") {
     // 3 assets, each present as PNG + lossy JPEG copy, plus one garbage payload
     val recs = (1L to 3L).flatMap { s =>

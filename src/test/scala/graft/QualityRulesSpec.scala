@@ -154,7 +154,6 @@ class QualityRulesSpec extends SparkSpecBase {
   }
 
   test("SQL surface: gramrepstats64 registered and equal to the Column API") {
-    graft.plans.GraftFunctions.register(spark)
     val doc = "a b a b c d e f g h i j"
     val viaSql = spark.sql(s"SELECT gramrepstats64('$doc') AS s")
       .collect()(0).getSeq[Long](0)

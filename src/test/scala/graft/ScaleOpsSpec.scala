@@ -57,6 +57,29 @@ class ScaleOpsSpec extends SparkSpecBase {
     assert(salted == plain)
   }
 
+  test("salted aggregation and join equal the plain ones when one key holds half the rows") {
+    // the hot-aircraft shape: key 0 carries every even row, the rest
+    // spread over ~1000 keys
+    val facts = spark.range(20000).select(
+      when(col("id") % 2 === 0, 0L)
+        .otherwise(pmod(hash(col("id")), lit(1000)).cast("long")).as("k"),
+      (col("id") % 1000).cast("double").as("v"))
+    val plain = facts.groupBy("k")
+      .agg(sum(col("v").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .as[(Long, Double)].collect().toMap
+    val salted = ScaleOps.saltedSum(facts, "k", "v", 32)
+      .as[(Long, Double)].collect().toMap
+    assert(salted == plain)
+
+    val dim = spark.range(1000).select(col("id").as("k"), (col("id") * 2).as("dim"))
+    def perKey(joined: org.apache.spark.sql.DataFrame): Map[Long, (Long, Double)] =
+      joined.groupBy("k").agg(count(lit(1)).as("n"), sum(col("v") + col("dim")).as("s"))
+        .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    val plainJoin = perKey(facts.join(dim, "k"))
+    assert(plainJoin(0L)._1 >= 10000L) // every even row, plus odd rows hashing to 0
+    assert(perKey(ScaleOps.saltedJoin(facts, dim, "k", 32)) == plainJoin)
+  }
+
   test("two-level prefix sum equals the global-window cumulative sum") {
     val e = Tables.events(spark, sf)
       .select(col("event_id"), col("value").cast("decimal(18,2)").as("v"))

@@ -46,6 +46,28 @@ class SimhashPairsSpec extends SparkSpecBase {
     Dedup.releaseCaches(spark)
   }
 
+  test("radius-7 and radius-3 banded Hamming joins both find every planted 2-bit copy") {
+    import spark.implicits._
+    // n random 64-bit prints plus n/20 copies of print (i·17) mod n
+    // with bits (i mod 60) and (i mod 60) + 2 flipped: within both
+    // radii, so the 8×8-bit (lossless to 7) and the 4×16-bit
+    // (lossless to 3) band families must each recover all of them
+    val n = 2000L
+    val base = spark.range(n).select(col("id"), expr("xxhash64(id)").as("phash"))
+    val planted = spark.range(n / 20).select((col("id") + n).as("id"),
+      expr(s"xxhash64((id * 17) % $n) ^ shiftleft(5L, CAST(id % 60 AS INT))").as("phash"))
+    val prints = base.unionByName(planted)
+    val want = (0L until n / 20).map(i => ((i * 17) % n, i + n)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("a", "b").as[(Long, Long)].collect()
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toSet
+    val r7 = pairs(Dedup.hammingBandPairsWide(prints, "id", "phash", maxHamming = 7))
+    val r3 = pairs(Dedup.hammingBandPairs(prints, "id", "phash", maxHamming = 3))
+    assert(want.subsetOf(r7), s"radius 7 missed ${want -- r7}")
+    assert(want.subsetOf(r3), s"radius 3 missed ${want -- r3}")
+    assert(r3.subsetOf(r7), "every radius-3 pair is within radius 7")
+  }
+
   test("simhashPairs rejects a radius the band count cannot cover") {
     import spark.implicits._
     val df = Seq((1L, "a b c")).toDF("doc_id", "text")

@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM-wide session; Spark
-  * reuses it across suites via getOrCreate).
+/** Shared local session for all specs: the entry points' recipe
+  * ([[GraftSession.local]]) at a fixed 4 cores, one JVM-wide session
+  * that Spark reuses across suites via getOrCreate.
   */
 trait SparkSpecBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   lazy val sf: String = "/root/testdata/sf0.001"
 

@@ -124,6 +124,37 @@ class StreamIndexCompactionSpec extends SparkSpecBase {
     assert(replayed == before, "folded agg-state replay double-counted")
   }
 
+  test("J23: token-drift read-out identical after count-sum compaction; the log collapses to vocabulary rows") {
+    val root = tmp("graft_j23_tok")
+    // J25's drift log: every batch writes its (source, token) partial
+    // counts, so the log holds ~batches × vocabulary rows
+    def docBatch(b: Int) = spark.range(300).select(
+      concat(lit("src"), pmod(col("id"), lit(3))).as("source"),
+      concat(lit("common words w"), pmod(col("id") * 31 + lit(b.toLong), lit(64L)),
+        lit(" tail"), pmod(col("id"), lit(7L))).as("text"))
+    val batches = 12
+    (0 until batches).foreach { b =>
+      AdsbStream.mergeBatchIntoTokenState(docBatch(b), b.toLong, "source", "text", root)
+    }
+    def report = AdsbStream.readDriftReport(spark, root, "source")
+      .collect().map(_.toString).sorted.toSeq
+    val rowsBefore = spark.read.parquet(root).count()
+    val before = report
+    StreamIndexCompaction.compactIndex(spark, root, keepRecent = 2,
+      merge = StreamIndexCompaction.mergeTokenState("source"))
+    val state = spark.read.parquet(root)
+    assert(report == before, "compaction changed the drift read-out")
+    assert(state.count() < rowsBefore / 3,
+      s"count-sum fold must collapse the log: $rowsBefore -> ${state.count()}")
+    // one report row per slice, each JSD inside [0, ln 2] plus the 6-dp
+    // quantization headroom of TextOps.driftReportFromCounts
+    val vocab = state.select("w").distinct().count()
+    val jsd = AdsbStream.readDriftReport(spark, root, "source")
+      .select("jsd6").as[Double].collect()
+    assert(jsd.length == 3)
+    assert(jsd.forall(j => j >= 0.0 && j <= math.log(2.0) + vocab * 5e-7), jsd.toSeq)
+  }
+
   test("J23: quantile-sketch read-out identical after compaction; folded replay noops") {
     val root = tmp("graft_j23_q")
     def rows(lo: Int, hi: Int) =

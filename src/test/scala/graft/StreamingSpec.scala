@@ -232,6 +232,67 @@ class StreamingSpec extends SparkSpecBase {
     assert(out.length == 2) // three+1 copies of dup → 1; batch1(1) → 1
   }
 
+  /** One microbatch of a `fleet`-aircraft feed: every batch touches
+    * every key, and event time advances `stepS` seconds per batch.
+    */
+  private def fleetBatch(b: Int, rows: Int, fleet: Int, stepS: Long): Seq[CurrentPosition] =
+    (0 until rows).map { i =>
+      val key = i % fleet
+      CurrentPosition(f"icao$key%06x", s"cs$key", (key % 180) - 90.0,
+        (key % 360) - 180.0, key % 40000, (i % 600).toDouble, "local",
+        ts(b * stepS + i / fleet))
+    }
+
+  test("streaming state stays bounded: J3 holds the fleet, J5 holds the watermark window") {
+    val fleet = 50
+    // J3: latest state per aircraft plateaus at the fleet size from
+    // the first batch on, whatever the feed volume
+    val in3 = MemoryStream[CurrentPosition](spark)
+    val q3 = AdsbStream.latestStateWithTtl(spark, in3.toDF(),
+        ttlMs = 3600000L, watermark = "10 seconds")
+      .writeStream.format("noop").outputMode("update").start()
+    val j3 = try (0 until 4).map { b =>
+      in3.addData(fleetBatch(b, 4 * fleet, fleet, stepS = 1))
+      q3.processAllAvailable()
+      q3.lastProgress.stateOperators.head.numRowsTotal
+    } finally q3.stop()
+    assert(j3 == Seq.fill(4)(fleet.toLong), j3)
+    // J5: every row arrives twice; event time moves 5 s per batch
+    // against a 10 s watermark, so dedup state rises while the window
+    // fills and then holds the unique rows inside it
+    val in5 = MemoryStream[CurrentPosition](spark)
+    val q5 = AdsbStream.dedupStream(in5.toDF(), "10 seconds", Seq("icao24"))
+      .writeStream.format("noop").outputMode("append").start()
+    val j5 = try (0 until 6).map { b =>
+      val rows = fleetBatch(b, 2 * fleet, fleet, stepS = 5)
+      in5.addData(rows ++ rows)
+      q5.processAllAvailable()
+      q5.lastProgress.stateOperators.head.numRowsTotal
+    } finally q5.stop()
+    assert(j5 == Seq(100L, 200L, 300L, 400L, 400L, 400L), j5)
+  }
+
+  test("the bloom screen and the quality gate keep no streaming state (J12, J13)") {
+    import graft.streaming.AdsbStream.StreamDoc
+    val blacklist = spark.range(0, 1000).filter(col("id") % 7 === 0)
+      .select(col("id").as("banned"))
+    val docs = (0L until 300L).map(i =>
+      StreamDoc(i, (0 until 12).map(j => s"w${(i * 7 + j) % 512}").mkString(" ")))
+    def stateRows(gate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Seq[Long] = {
+      val input = MemoryStream[StreamDoc](spark)
+      val q = gate(input.toDF()).writeStream.format("noop").outputMode("append").start()
+      try docs.grouped(100).toSeq.map { batch =>
+        input.addData(batch)
+        q.processAllAvailable()
+        q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      } finally q.stop()
+    }
+    assert(stateRows(AdsbStream.bloomScreenStream(_, "doc_id", blacklist, "banned", 1 << 14, 5))
+      == Seq(0L, 0L, 0L))
+    assert(stateRows(AdsbStream.qualityGateStream(_, "doc_id", "text",
+      graft.queries.PipelineQueries.classifierWeights)) == Seq(0L, 0L, 0L))
+  }
+
   test("stream-static enrichment broadcasts the dimension (J6)") {
     val input = MemoryStream[RawReport](spark)
     input.addData(batch1.take(2))

@@ -161,7 +161,6 @@ class SubstringDedupSpec extends SparkSpecBase {
   }
 
   test("SQL surface: tokenwindowhashes64 registered and equal to the Column API") {
-    graft.plans.GraftFunctions.register(spark)
     val viaSql = spark.sql(
       "SELECT tokenwindowhashes64('a b c d e', 3) AS h").as[Seq[Long]].head()
     assert(viaSql == refWindows("a b c d e", 3))

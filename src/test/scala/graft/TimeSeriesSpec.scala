@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.AsOfJoin
-import graft.plans.GraftFunctions
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
@@ -70,7 +69,6 @@ class TimeSeriesSpec extends SparkSpecBase {
   }
 
   test("md5prefix64 is callable from SQL after registration (K-group)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT md5prefix64('abc') = cast(conv(substring(md5('abc'), 1, 15), 16, 10) as bigint) AS ok")
       .as[Boolean].collect()
